@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_ext_spark.llm.dedup import normalize_text
+from spark_ext_spark.sources.io import local_frame
 
 __all__ = ["tokens", "text_stats", "quality_score", "language_id",
            "fingerprint", "tfidf_top_terms", "chunk_documents",
@@ -227,7 +228,7 @@ def language_id(df: DataFrame, id_col: str, text_col: str,
     spark = df.sparkSession
     profile_rows = [(w, lang) for lang, ws in profiles.items() for w in ws]
     prof = F.broadcast(
-        spark.createDataFrame(profile_rows, "word string, lang string"))
+        local_frame(spark, profile_rows, "word string, lang string"))
 
     exploded = df.select(F.col(id_col),
                          F.explode(tokens(text_col)).alias("word"))

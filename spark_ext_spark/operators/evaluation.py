@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_ext_spark.sources.io import local_frame
+
 
 class BinaryModelMetrics:
     """Curves over a (score, label) DataFrame; label ∈ {0.0, 1.0}.
@@ -201,13 +203,14 @@ class BinaryModelMetrics:
 
     def _with_endpoints(self, curve: DataFrame, first: tuple | None,
                         last: tuple | None) -> DataFrame:
+        # endpoint rows typed by curve.schema itself, so the positional
+        # unionAll joins identical types by construction
         spark = curve.sparkSession
-        cols = curve.columns
         out = curve
         if first is not None:
-            out = spark.createDataFrame([first], cols).unionAll(out)
+            out = local_frame(spark, [first], curve.schema).unionAll(out)
         if last is not None:
-            out = out.unionAll(spark.createDataFrame([last], cols))
+            out = out.unionAll(local_frame(spark, [last], curve.schema))
         return out
 
     def unpersist(self) -> None:

@@ -28,10 +28,12 @@ cardinality is the dictionary size, ≤ ``maxKeys``), and one bounded
 collect of the final dictionary. The cumsum defaults to a global
 window (single task — fine to ~1e6 distinct keys); set
 ``fitPartitions=N`` to switch to distributed two-phase prefix sums
-(operators/prefix.py) when the key table itself is huge. The transform broadcasts the
-dictionary explicitly (``sc.broadcast``) instead of closure-capturing
-it per task (the reference ships keys in the UDF closure,
-GatherEncoder.scala:304,326-370).
+(operators/prefix.py) when the key table itself is huge. The vector
+transform broadcasts the dictionary explicitly (``sc.broadcast``)
+instead of closure-capturing it per task (the reference ships keys in
+the UDF closure, GatherEncoder.scala:304,326-370);
+``transform_exploded`` ships it back as a JVM LocalRelation
+(``sources.io.local_frame``) broadcast-joined without a Python worker.
 """
 
 from __future__ import annotations
@@ -43,10 +45,11 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from spark_ext_spark.operators.prefix import partitioned_cumulative_sums
+from spark_ext_spark.sources.io import local_frame
 
 TRANSFORMATIONS = ("top", "index")
 
@@ -425,8 +428,9 @@ class GatherEncoderModel(Model, _GatherEncoderParams,
     def transform_exploded(self, dataset: DataFrame, pk_cols: list[str]) -> DataFrame:
         """SQL-checkable flat encoding: one (pk..., slot, value) row per
         non-zero vector element. Pure DataFrame ops (broadcast join on
-        the dictionary), no UDF — this is also the faster path at scale
-        when the consumer wants long-form features.
+        the dictionary, a LocalRelation), no UDF and no Python worker —
+        this is also the faster path at scale when the consumer wants
+        long-form features.
 
         Duplicate-key semantics match the vector path and the reference
         (GatherEncoder.scala:326-370): for KNOWN keys the LAST value in
@@ -443,10 +447,10 @@ class GatherEncoderModel(Model, _GatherEncoderParams,
         # an EMPTY dictionary — every key null/filtered at fit — must
         # produce an empty known side, not a schema-inference crash
         elem = dataset.schema[in_col].dataType.elementType
-        ktype = elem[key].dataType.simpleString()
-        dict_df = spark.createDataFrame(
-            [(k, i) for i, k in enumerate(self.keys)],
-            schema=f"key {ktype}, slot long")
+        dict_df = local_frame(
+            spark, [(k, i) for i, k in enumerate(self.keys)],
+            StructType([StructField("key", elem[key].dataType),
+                        StructField("slot", LongType())]))
         exploded = (dataset
                     .select(*pk_cols, F.posexplode(in_col).alias("pos", "kv"))
                     .select(*pk_cols, "pos",

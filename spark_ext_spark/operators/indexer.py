@@ -31,6 +31,8 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_ext_spark.sources.io import local_frame
+
 SHORT_MAX = 32767
 HANDLE_INVALID = ("error", "skip", "keep")
 
@@ -117,8 +119,8 @@ class StringToShortIndexerModel(Model, _IndexerParams,
         spark = dataset.sparkSession
         uid = self.uid
         lbl_col, idx_col = f"{uid}_label", f"{uid}_idx"
-        label_df = spark.createDataFrame(
-            [(lbl, i) for i, lbl in enumerate(self.labels)],
+        label_df = local_frame(
+            spark, [(lbl, i) for i, lbl in enumerate(self.labels)],
             f"{lbl_col} string, {idx_col} short")
 
         joined = dataset.join(

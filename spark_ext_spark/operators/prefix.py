@@ -4,7 +4,8 @@ A global ``Window.orderBy(...)`` funnels every row through ONE task —
 fine for a compacted dictionary table, a cliff at ~1e7+ rows. This is
 the scale-out replacement: range-partition on the ordering, cumsum
 within each partition, then add each partition's prefix offset computed
-from a bounded (one row per partition) driver collect. Exactly the
+from a bounded (one row per partition) driver collect and broadcast
+back as a JVM LocalRelation (``sources.io.local_frame``). Exactly the
 technique the reference hand-rolls over RDDs for its cumulative
 confusion matrices (BinaryModelMetrics.scala:198-216: per-partition
 totals → driver scanLeft → mapPartitionsWithIndex offset add), here as
@@ -27,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from spark_ext_spark.sources.io import local_frame
 
 __all__ = ["partitioned_cumulative_sums"]
 
@@ -82,9 +85,8 @@ def partitioned_cumulative_sums(df: DataFrame, order_cols: list,
                            for name, c in vals.items()]))
     totals = totals_frame.collect()
     by_pid = {r["__pid"]: r for r in totals}
-    # zero literal + offsets schema follow each aggregate's own type —
-    # mixing a Python int 0 into a double running sum would make
-    # createDataFrame's type merge fail (LongType vs DoubleType)
+    # zero literal + offsets schema follow each aggregate's own type,
+    # so a grand total over no rows is 0.0 for a double sum, not int 0
     from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
     val_fields = totals_frame.schema.fields[1:]
     fractional = {f.name: isinstance(f.dataType, (DoubleType, FloatType))
@@ -98,7 +100,7 @@ def partitioned_cumulative_sums(df: DataFrame, order_cols: list,
                 t = by_pid[p][name]
                 acc[name] += (0.0 if fractional[name] else 0) \
                     if t is None else t
-    off_df = spark.createDataFrame(offsets, StructType(
+    off_df = local_frame(spark, offsets, StructType(
         [StructField("__pid", totals_frame.schema.fields[0].dataType)]
         + [StructField(f"__off_{f.name}", f.dataType) for f in val_fields]))
     if grand_totals is not None:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from spark_ext_spark.operators.evaluation import BinaryModelMetrics
 from spark_ext_spark.plans.relational import load
+from spark_ext_spark.sources.io import local_frame
 
 
 def _metrics(spark: SparkSession, sf_dir: str, num_bins: int = 0) -> BinaryModelMetrics:
@@ -115,8 +116,8 @@ def auc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         import math
         return math.floor(x * 10000 + 0.5) / 10000
 
-    return spark.createDataFrame(
-        [(q4(roc_auc), q4(pr_auc))],
+    return local_frame(
+        spark, [(q4(roc_auc), q4(pr_auc))],
         "auc_roc double, auc_pr double")
 
 

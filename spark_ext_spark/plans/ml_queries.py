@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from spark_ext_spark.operators.classification import LocalLogisticRegression
 from spark_ext_spark.operators.s2cell import S2CellTransformer
 from spark_ext_spark.plans.relational import load
+from spark_ext_spark.sources.io import local_frame
 
 
 def s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,8 +176,8 @@ def local_lr_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = LocalLogisticRegression(regParam=0.01, elasticNetParam=0.5,
                                     maxIter=200).fit(assembled)
     coefs = [float(c) for c in model.coefficients]
-    return spark.createDataFrame(
-        [(round(model.intercept, 3), *[round(c, 3) for c in coefs])],
+    return local_frame(
+        spark, [(round(model.intercept, 3), *[round(c, 3) for c in coefs])],
         "intercept double, w_view double, w_click double, w_events double")
 
 

@@ -8,5 +8,5 @@ scale-aware write helpers.
 """
 
 from spark_ext_spark.sources.io import (  # noqa: F401
-    ensure_fanout, read_csv, read_json, read_parquet, read_table,
-    write_csv, write_json, write_parquet)
+    ensure_fanout, local_frame, read_csv, read_json, read_parquet,
+    read_table, write_csv, write_json, write_parquet)

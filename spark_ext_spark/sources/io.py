@@ -6,13 +6,17 @@
   at 100 TB the difference between 200 and 20,000 output files is an
   operational incident, so ``target_file_rows``/``partition_by`` are
   first-class.
+- Driver-built tables (dictionaries, offsets, one-row results) enter
+  the plan through ``local_frame`` only, as Arrow-backed JVM frames.
 """
 
 from __future__ import annotations
 
+from datetime import timezone
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 
 def read_parquet(spark: SparkSession, path: str,
@@ -85,6 +89,41 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet",
                         nano_ts_cols=_FULL_TS_COLS.get(name, ()),
                         lenient_ts_cols=_LENIENT_TS_COLS.get(name, ()))
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A driver-built table (``rows`` of Python tuples, typed by
+    ``schema``) as a DataFrame that never touches a Python worker.
+
+    ``createDataFrame(<list>)`` parallelizes the rows into a PythonRDD,
+    so even a 5-row dictionary runs ``defaultParallelism`` tasks that
+    each wait on a Python worker. A ``pyarrow.Table`` typed from the
+    schema instead becomes a JVM ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and a JVM-side
+    Arrow-batch RDD above it (Spark's own dispatch; SCALE.md "Driver-built
+    tables"). Independent of ``spark.sql.execution.arrow.pyspark.enabled``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        values = [r[i] for r in rows]
+        if isinstance(field.dataType, TimestampType):
+            # PySpark's row conversion (and so collect()) reads naive
+            # datetimes as local wall-clock time; pyarrow reads the wall
+            # clock of any datetime as UTC, so hand it UTC wall clocks
+            values = [None if v is None else v.astimezone(timezone.utc)
+                      for v in values]
+        columns.append(values)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def read_csv(spark: SparkSession, path: str,

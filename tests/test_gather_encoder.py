@@ -5,9 +5,11 @@ encodings for every mode)."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
-from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, DecimalType, IntegerType, LongType,
+                               StringType, StructField, StructType)
 
 from spark_ext_spark.operators.gather_encoder import (GatherEncoder,
                                                       GatherEncoderModel)
@@ -269,6 +271,41 @@ def test_duplicate_keys_last_wins_both_paths(spark):
     flat = model.transform_exploded(df, ["cookie_id"]).collect()
     got = {r["slot"]: r["value"] for r in flat}
     assert got == {0: 9.0, 3: 5.0}
+
+
+def test_transform_exploded_decimal_keys(spark):
+    """Decimal keys: the dictionary side is typed from the input
+    element struct, so decimal(10,2) keys join exactly — known keys
+    last-wins, unseen keys summed — and agree with the vector path. An
+    empty decimal dictionary yields an empty known side."""
+    schema = StructType([
+        StructField("cookie_id", StringType()),
+        StructField("sites", ArrayType(StructType([
+            StructField("site", DecimalType(10, 2)),
+            StructField("impressions", LongType()),
+        ]))),
+    ])
+    df = spark.createDataFrame(
+        [("c1", [(Decimal("1.10"), 5), (Decimal("2.20"), 7),
+                 (Decimal("9.99"), 1)]),
+         ("c2", [(Decimal("2.20"), 3), (Decimal("2.20"), 4)]),
+         ("c3", [])],
+        schema)
+    model = _model([Decimal("2.20"), Decimal("1.10")], allOther=True)
+    flat = sorted(tuple(r) for r in
+                  model.transform_exploded(df, ["cookie_id"]).collect())
+    assert flat == [("c1", 0, 7.0), ("c1", 1, 5.0), ("c1", 2, 1.0),
+                    ("c2", 0, 4.0)]
+    for cookie, vec in _features(model, df).items():
+        assert sorted(zip(vec.indices, vec.values)) == \
+            [(slot, v) for c, slot, v in flat if c == cookie]
+
+    empty = _model([], failOnEmptyKeys=False, allOther=True)
+    assert sorted(tuple(r) for r in
+                  empty.transform_exploded(df, ["cookie_id"]).collect()) \
+        == [("c1", 0, 13.0), ("c2", 0, 7.0)]
+    empty._set(allOther=False)
+    assert empty.transform_exploded(df, ["cookie_id"]).count() == 0
 
 
 def test_null_values_unbox_to_zero_both_encode_paths(spark):

@@ -2,12 +2,22 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import ast
+import time
+from datetime import datetime
+from decimal import Decimal
+from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import (DecimalType, DoubleType, ShortType, StringType,
+                               StructField, StructType)
+
+import spark_ext_spark
 from spark_ext_spark.functions import register_sql_functions
 from spark_ext_spark.functions.s2 import cell_token
-from spark_ext_spark.sources import (read_csv, read_parquet, read_table,
-                                     write_parquet)
+from spark_ext_spark.sources import (local_frame, read_csv, read_parquet,
+                                     read_table, write_parquet)
 
 
 def test_read_table_normalizes_event_ts(spark, sf_small):
@@ -18,6 +28,83 @@ def test_read_table_normalizes_event_ts(spark, sf_small):
     assert ev.count() > 0
     # unix_micros is the downstream op that breaks on NTZ — pin it works
     assert ev.select(F.unix_micros("ts").alias("um")).first()["um"] is not None
+
+
+LOCAL_SCHEMA = StructType([
+    StructField("k", DecimalType(10, 2)),
+    StructField("s", ShortType()),
+    StructField("t", StringType()),
+    StructField("d", DoubleType()),
+])
+LOCAL_ROWS = [(Decimal("12345678.90"), 32767, "a", float("nan")),
+              (Decimal("-0.01"), -32768, None, -0.0),
+              (None, None, "", None)]
+
+
+@pytest.mark.parametrize("arrow_enabled", ["true", "false"])
+def test_local_frame_type_matrix(spark, arrow_enabled):
+    """local_frame round-trips decimal keys, shorts, NULL strings and a
+    NaN double exactly, keeps the schema, and plans as a JVM
+    LocalRelation — also for 0 rows, and whatever the pyspark Arrow
+    conf says."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, arrow_enabled)
+    try:
+        for rows in (LOCAL_ROWS, []):
+            df = local_frame(spark, rows, LOCAL_SCHEMA)
+            assert df.schema == LOCAL_SCHEMA
+            plan = df._jdf.queryExecution().analyzed()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            # repr: exact values, NaN == NaN, -0.0 != 0.0, int != float
+            assert repr([tuple(r) for r in df.collect()]) == repr(rows)
+        ddl = local_frame(spark, [("w", None)], "word string, lang string")
+        assert ddl.dtypes == [("word", "string"), ("lang", "string")]
+        assert ddl.collect() == [("w", None)]
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_local_frame_naive_timestamps_are_local_time(spark, monkeypatch):
+    """A naive datetime means local wall-clock time, as in PySpark's row
+    conversion (and so in collect()): local_frame must land on the same
+    instant as createDataFrame(<list>) in a non-UTC process zone."""
+    ts = datetime(2020, 3, 1, 12, 30, 15, 123456)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        micros = F.unix_micros("ts").alias("us")
+        arrow = local_frame(spark, [(ts,)], "ts timestamp")
+        listed = spark.createDataFrame([(ts,)], "ts timestamp")
+        assert arrow.select(micros).collect() == listed.select(micros).collect()
+        assert arrow.first()["ts"] == ts
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-built table under spark_ext_spark/ goes through
+    sources.io.local_frame. A createDataFrame(<list>) call elsewhere
+    would bring back the PythonRDD hop: one Python-worker task per
+    default-parallelism slot, even for a 5-row dictionary."""
+    root = Path(spark_ext_spark.__file__).parent
+    io_path = root / "sources" / "io.py"
+    io_tree = ast.parse(io_path.read_text())
+    helper = next(n for n in io_tree.body
+                  if isinstance(n, ast.FunctionDef) and n.name == "local_frame")
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"):
+                continue
+            if path == io_path and \
+                    helper.lineno <= node.lineno <= helper.end_lineno:
+                continue
+            stray.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert stray == [], f"createDataFrame outside local_frame: {stray}"
 
 
 def test_csv_roundtrip(spark, tmp_path):
